@@ -22,7 +22,8 @@ published beside it.
 
 Env:
   SPARK_GRAFT_SF_DIR         input dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS           full-parallelism level (default 32)
+  SPARK_GRAFT_CPUS           full-parallelism level (default: the CPUs in
+                             this process's affinity mask)
   SPARK_GRAFT_BENCH_N        scaling pair base N (default 2; pair = N -> 4N.
                              r5: default moved 4 -> 2 on same-window A/B
                              evidence — see the SCALE_N comment)
@@ -55,7 +56,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 # 600k docs: the scaling measurement is eff = C/(C + 16*s) where C is the
 # job's CPU and s the 4N leg's fixed slack (stage tails + barrier, ~3s).
 # Doubling the corpus doubles C and halves the fixed-overhead distortion —
@@ -781,16 +782,6 @@ def _scaling_summary(pairs: list[dict]) -> dict:
     }
 
 
-def _input_bytes(path: str) -> int:
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    return sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _, fs in os.walk(path)
-        for f in fs
-    )
-
-
 def _still_converging(times: list[float]) -> bool:
     """True while the NEWEST rep is still lowering the running min by >1.5%.
 
@@ -811,8 +802,8 @@ def _extract_worker(master_cores: int, docs_path: str, media_path: str) -> dict:
     #     create empty tasks (a split with no row-group midpoint scans
     #     nothing but still pays task + footer overhead); 16m splits gave a
     #     160 MB file just ~11 scan tasks, starving 32 cores.
-    #   * AQE off for THIS job: with the media broadcast there is exactly one
-    #     exchange and a fixed partition count — AQE's per-stage
+    #   * AQE off for THIS job: the denormalized plan has exactly one
+    #     exchange (the groupBy) and a fixed partition count — AQE's per-stage
     #     materialization barrier cost ~10% wall and buys nothing here.
     #     (AQE stays ON in the library session defaults: joins/aggs over
     #     unknown data still want runtime re-planning + skew splitting.)
@@ -846,15 +837,9 @@ def _extract_worker(master_cores: int, docs_path: str, media_path: str) -> dict:
         # hash partitioning (north_rule) where it is actually needed.
         docs = spark.read.parquet(docs_path)
         media = spark.read.parquet(media_path)
-        # Full-corpus bench + v3 sidecar with owner keys -> "denormalized"
-        # (union media rows into the span stream; single shuffle, no
-        # broadcast build). Fallback: broadcast when small, else join.
-        if {"doc_id", "offset"}.issubset(set(media.columns)):
-            strategy = "denormalized"
-        elif _input_bytes(media_path) < 512 * 2**20:
-            strategy = "broadcast"
-        else:
-            strategy = "join"
+        # Full-corpus bench; the corpus.write sidecar carries owner keys, so
+        # "denormalized" (union media rows into the span stream; the
+        # groupBy is the single shuffle, no join).
         # warm-up: spin up every Python worker + JVM codegen before timing,
         # on the SAME plan shape as the timed run (same strategy => same
         # generated code; a different plan would leave the timed rep to pay
@@ -864,8 +849,8 @@ def _extract_worker(master_cores: int, docs_path: str, media_path: str) -> dict:
         # and warms every worker. Orphaned media rows are harmless here.
         extract.extract_documents(
             docs.sample(0.1, seed=1),
-            media.sample(0.1, seed=1) if strategy == "denormalized" else media,
-            media_strategy=strategy,
+            media.sample(0.1, seed=1),
+            media_strategy="denormalized",
         ).write.format("noop").mode("overwrite").save()
         n = docs.count()
         # min of N_REPS timed runs: the sandbox host shows CPU steal, so a
@@ -899,7 +884,7 @@ def _extract_worker(master_cores: int, docs_path: str, media_path: str) -> dict:
             w0 = time.time() * 1000
             t0 = time.perf_counter()
             extract.extract_documents(
-                docs, media, media_strategy=strategy
+                docs, media, media_strategy="denormalized"
             ).write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             windows.append((w0, time.time() * 1000))
@@ -981,11 +966,12 @@ def _run_previsacion(docs_path: str, media_path: str, reps: int | None = None) -
         docs = spark.read.parquet(docs_path)
         media = spark.read.parquet(media_path)
         prest, nom, ac = generator.dims_dataframes(spark)
-        # warm-up on a subset (Python workers + codegen), separate plan so
-        # its cache does not leak into the timed run
+        # warm-up on a subset (Python workers + codegen) with the timed
+        # rep's plan shape, sampled as in _extract_worker; a separate plan
+        # so its cache does not leak into the timed run
         wh, wd = previsacion.run_previsacion(
-            docs.sample(0.1, seed=1), media, prest, nom, ac,
-            media_strategy="broadcast",
+            docs.sample(0.1, seed=1), media.sample(0.1, seed=1), prest, nom, ac,
+            media_strategy="denormalized",
         )
         wh.write.format("noop").mode("overwrite").save()
         wd.write.format("noop").mode("overwrite").save()

@@ -10,7 +10,15 @@ Cluster usage (north_rule submission contract):
         --docs s3://bucket/docs_interleaved/ \
         --media s3://bucket/media/ \
         --output s3://bucket/previsacion_out/ \
-        [--salted] [--shuffle-partitions N]
+        [--media-strategy {join,denormalized}] \
+        [--salted | --quarantine [--max-intentos N] | --colocated] \
+        [--snapshots] [--shuffle-partitions N]
+
+--media-strategy picks how media spans get their layout payload: 'join'
+(default; resume-safe) or 'denormalized' (no join; needs the media sidecar's
+(doc_id, offset) owner keys and a full-corpus run, so it is refused on a
+resume). Join algorithm choice (e.g. broadcasting small media) is left to the
+optimizer.
 
 Local smoke:
 
@@ -44,7 +52,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--media-strategy",
-        choices=["join", "broadcast", "denormalized"],
+        choices=["join", "denormalized"],
         default="join",
         help="media_ref resolution strategy (see extract.clean_spans; "
         "'denormalized' requires owner keys in the media table and a "

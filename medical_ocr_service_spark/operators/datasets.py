@@ -12,6 +12,18 @@ All JVM-side, all deterministic, all DuckDB-oracle-replayable:
     by shard => parallel, no global sort);
   * contamination_pairs — train-vs-benchmark n-gram overlap detection
     (decontamination): docs sharing >= min_overlap distinct shingles.
+
+Every hash-driven operator here (hash_split, pack_contiguous and the four
+samplers) gates on the SAME unsalted hash, _u32(key) = first 32 bits of
+md5(key). Correlation hazard: composing two of them on the same key column
+is not independent. A sampler keeps a row at rate r iff u32 < r * 2^32,
+i.e. exactly hash_split's low-uniform prefix, so any row kept at a rate
+<= 0.9 by mixture_sample, stratified_downsample or weighted_downsample can
+never land in hash_split's 'test' split (u >= 0.9) on the same ids: the
+split comes out empty or starved and train/val proportions skew. Compose
+them on different key columns (or a derived key) until the gate is salted
+per operator; salting changes every operator's output and DuckDB oracle,
+so it is a separate change.
 """
 
 from __future__ import annotations
@@ -24,13 +36,17 @@ from .dedup import word_shingles
 HASH_DENOM = float(1 << 32)
 
 
+def _u32(key: F.Column) -> F.Column:
+    """First 8 hex chars of md5(key) as a BIGINT in [0, 2^32) — the one hash
+    gate of this module, bit-identical in Spark and DuckDB
+    (('0x'||substr(md5(k),1,8))::BIGINT)."""
+    return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
+
+
 def uniform_from_key(key) -> F.Column:
-    """md5-derived uniform in [0, 1): first 8 hex chars as a 32-bit int over
-    2^32 — bit-identical in Spark and DuckDB (('0x'||substr(md5(k),1,8))
-    ::BIGINT / 4294967296.0)."""
-    return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long") / F.lit(
-        HASH_DENOM
-    )
+    """md5-derived uniform in [0, 1): _u32(key) over 2^32 — bit-identical in
+    Spark and DuckDB (('0x'||substr(md5(k),1,8))::BIGINT / 4294967296.0)."""
+    return _u32(key) / F.lit(HASH_DENOM)
 
 
 def hash_split(
@@ -76,10 +92,7 @@ def pack_contiguous(
     sort, no single-partition exchange); at 10^12 docs raise n_shards to
     ~cores*waves. A document larger than `budget` occupies its own bin(s) —
     contiguous packing never splits a document."""
-    shard = (
-        F.conv(F.substring(F.md5(F.col(id_col)), 1, 8), 16, 10).cast("long")
-        % n_shards
-    )
+    shard = _u32(F.col(id_col)) % n_shards
     w = (
         Window.partitionBy("shard")
         .orderBy(id_col)
@@ -149,9 +162,7 @@ def stratified_downsample(
     thr = counts.crossJoin(mn).withColumn(
         "thr", F.expr("(mn * CAST(4294967296 AS BIGINT)) DIV cnt")
     )
-    u32 = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    u32 = _u32(F.col(key_col).cast("string"))
     return (
         df.join(F.broadcast(thr.select(stratum_col, "thr")), stratum_col)
         .filter(u32 < F.col("thr"))
@@ -283,9 +294,7 @@ def weighted_downsample(
     else:
         w_long = F.col(weight_col).cast("long")
     mx = df.agg(F.max(w_long).alias("_maxw"))
-    u32 = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    u32 = _u32(F.col(key_col).cast("string"))
     # integer floor-division via expr DIV (Column has no // for BIGINT DIV)
     return (
         df.crossJoin(F.broadcast(mx))
@@ -326,9 +335,7 @@ def stratum_fixed_k_sample(
     and the oracle replays both stages verbatim.
     """
     counts = df.groupBy(stratum_col).agg(F.count("*").alias("_cnt"))
-    u32 = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    u32 = _u32(F.col(key_col).cast("string"))
     budget = int(k) * int(slack)
     thr = F.expr(
         f"CASE WHEN _cnt <= {budget} THEN 4294967296 "
@@ -549,7 +556,5 @@ def mixture_sample(
         cond = F.col(group_col) == g
         thr = F.when(cond, t) if thr is None else thr.when(cond, t)
     thr = thr.otherwise(F.lit(-1))  # groups outside the mix never pass
-    gate = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    gate = _u32(F.col(key_col).cast("string"))
     return df.filter(gate < thr)

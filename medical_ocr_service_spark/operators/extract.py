@@ -13,16 +13,16 @@ for media spans.
 Scale design (10^12 docs / 100 TB):
   * explode(spans) is narrow — no shuffle;
   * text spans never touch media resolution: the plan splits by kind and only
-    the media subset resolves payloads, via one of three strategies
+    the media subset resolves payloads, via one of two strategies
     (clean_spans media_strategy): media_ref join with both tables bucketed by
-    media_ref (shuffle-free at scale), broadcast hash join for
-    fits-in-memory media, or the denormalized union (media sidecar carries
+    media_ref (shuffle-free at scale; the optimizer picks the join
+    algorithm), or the denormalized union (media sidecar carries
     (doc_id, offset) owner keys -> zero joins, groupBy(doc_id) is the plan's
     only exchange);
-  * span ordering uses a window over (doc_id, offset). Spans-per-doc is
-    bounded (10^3 pathological), so per-key state is tiny; AQE skew-join
-    handles stragglers. Reassembly to arrays uses
-    sort_array(collect_list(struct(offset, ...))) — NEVER shuffle order;
+  * span order has ONE definition: reassembly to arrays via
+    sort_array(collect_list(struct(offset, ...))) — NEVER shuffle order.
+    Spans-per-doc is bounded (10^3 pathological), so per-key state is tiny;
+    AQE skew-join handles stragglers. ordered_spans is that array inlined;
   * text-span cleaning is pure whole-stage-codegen column expressions
     (strip_boilerplate_col — no Python at all on that branch); the only
     Arrow pandas UDFs left are the XY-cut layout parse (recursive) and the
@@ -36,7 +36,7 @@ vectorized operators.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.extraction_udfs import (
@@ -70,10 +70,9 @@ def clean_spans(
     * ``"join"`` (default, always correct): sort-merge/shuffle join of the
       media spans against the media table on media_ref. At 10^12-doc scale
       both tables are bucketed by media_ref so this is co-located and
-      shuffle-free.
-    * ``"broadcast"``: broadcast hash join — zero exchanges on the span side,
-      but pays a serial driver-side hash-relation build per action. Right
-      when the media table fits executor memory and the job is long.
+      shuffle-free. There is no per-call join hint: when the media side is
+      small the optimizer broadcasts it on its own
+      (spark.sql.autoBroadcastJoinThreshold).
     * ``"denormalized"``: NO join at all. Requires the media sidecar to carry
       the owner keys ``(doc_id, offset)`` (written at ingest — see
       corpus.generator) and to contain EXACTLY the media spans of ``docs``
@@ -86,12 +85,19 @@ def clean_spans(
     ``with_errors=True`` adds an ``_err`` column (Q3 quarantine): a media
     span whose layout payload fails to parse carries the error string
     instead of failing the task; text spans always have ``_err`` NULL.
+
+    Any other ``media_strategy`` raises ValueError.
     """
     from ..functions.extraction_udfs import (
         apply_pruned_layout,
         layout_text_err_udf,
     )
 
+    if media_strategy not in ("join", "denormalized"):
+        raise ValueError(
+            "media_strategy must be 'join' or 'denormalized', "
+            f"got {media_strategy!r}"
+        )
     spans = exploded_spans(docs)
 
     # JVM-native density strip (strip_boilerplate_col): the text-span branch
@@ -120,14 +126,11 @@ def clean_spans(
             F.col("offset").cast("int").alias("offset"),
         )
     else:
-        media_dim = media.select("media_ref", "layout_json")
-        if media_strategy == "broadcast":
-            media_dim = F.broadcast(media_dim)
         media_part = (
             spans.filter(F.col("kind") == "media")
             .drop("text")
             # 1:1 join; media_ref is unique on both sides.
-            .join(media_dim, "media_ref", "left")
+            .join(media.select("media_ref", "layout_json"), "media_ref", "left")
         )
     if with_errors:
         # quarantine path (Q3): per-row error capture needs the raw payload
@@ -163,16 +166,11 @@ def ordered_spans(
 ) -> DataFrame:
     """The span-sequence table: (doc_id, kind, text, media_ref, order).
 
-    order = 1-based rank of offset within the document. Offsets are unique
-    per document — the input contract (duplicate offsets would tie-break by
-    the remaining struct fields in reassembled_docs but by arrival order
-    here; don't feed malformed docs).
+    order = 1-based rank of offset within the document: the reassembled_docs
+    span array inlined, so both share one definition of span order.
     """
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    return (
-        clean_spans(docs, media, media_strategy)
-        .withColumn("order", F.row_number().over(w).cast("int"))
-        .drop("offset")
+    return reassembled_docs(docs, media, media_strategy).select(
+        "doc_id", F.inline("spans")
     )
 
 
@@ -320,12 +318,12 @@ def extract_documents(
         )
     else:
         assembled = reassembled_docs(docs, media, media_strategy)
-    # Field extraction stays an Arrow pandas UDF *by measurement*: the
-    # JVM-expression twin (extract_fields_col, kept + parity-tested) built
-    # an expression tree large enough to fall out of whole-stage codegen and
-    # re-ran each regex per reference — 2x slower end-to-end at 4 cores
-    # (90s vs 44s / 300k docs). Compiled re + one pass per doc in an Arrow
-    # batch wins for this many-regex-per-row shape.
+    # Field extraction is an Arrow pandas UDF *by measurement*: the same
+    # fields as a JVM expression (one regexp_extract per field) build a tree
+    # large enough to fall out of whole-stage codegen and re-run each regex
+    # per reference — measured 2x slower end-to-end at 4 cores (90s vs 44s /
+    # 300k docs). Compiled re + one pass per doc in an Arrow batch wins for
+    # this many-regex-per-row shape.
     return _with_fields(assembled)
 
 

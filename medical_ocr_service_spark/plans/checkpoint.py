@@ -175,7 +175,7 @@ class CheckpointedExtraction:
             raise ValueError(
                 "media_strategy='denormalized' is unsafe when resuming from an "
                 "existing snapshot (media rows of already-done docs would "
-                "reappear); use 'join' or 'broadcast'"
+                "reappear); use 'join'"
             )
         if colocated and (salted or quarantine):
             raise ValueError(

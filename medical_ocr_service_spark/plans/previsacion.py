@@ -32,23 +32,20 @@ def run_previsacion(
     nomencladores: DataFrame,
     acuerdos: DataFrame,
     media_strategy: str = "join",
-    practice_matcher: str = "auto",
     tenant_id: str | None = None,
-    acuerdos_count: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (visacion_previa, det_visacion_previa).
 
     ``media_strategy`` as in extract.clean_spans.
 
-    ``practice_matcher``: 'fast' ships the agreements dim in the UDF closure
-    (zero extra shuffles — correct only while the dim fits driver/executor
-    memory), 'join' is the broadcast-join path that scales to any dim size,
-    'auto' (default) probes the agreements table size and falls back to
-    'join' above config.FAST_MATCH_MAX_AGREEMENTS rows. The probe is a
-    ``limit(cap+1)`` count (CollectLimit — scans partitions incrementally
-    and stops at cap+1 rows), NOT a full-table count() action; callers with
-    catalog/cached statistics can skip even that by passing
-    ``acuerdos_count``.
+    The practice matcher is chosen by the agreements table's size:
+    match_practices_fast ships the agreements dim in the UDF closure (zero
+    extra shuffles — correct only while the dim fits driver/executor
+    memory) up to config.FAST_MATCH_MAX_AGREEMENTS rows; above that,
+    match_practices, the broadcast-join path that scales to any dim size.
+    The size probe is a ``limit(cap+1)`` count (CollectLimit — scans
+    partitions incrementally and stops at cap+1 rows), NOT a full-table
+    count() action.
 
     ``tenant_id`` (P1, reference matching.service.js:25-29 / migration_
     multitenant.sql): when given, the whole run is scoped to ONE tenant —
@@ -61,8 +58,8 @@ def run_previsacion(
             # the media sidecar is not tenant-filtered; unioned media rows
             # would resurrect other tenants' spans
             raise ValueError(
-                "tenant_id scoping requires media_strategy 'join' or "
-                "'broadcast' (the denormalized sidecar is not tenant-scoped)"
+                "tenant_id scoping requires media_strategy 'join' "
+                "(the denormalized sidecar is not tenant-scoped)"
             )
         docs = docs.filter(F.col("tenant_id") == tenant_id)
         prestadores = prestadores.filter(F.col("tenant_id") == tenant_id)
@@ -119,23 +116,11 @@ def run_previsacion(
     # fused closure-side matcher: identical rows to match_practices (pytest
     # asserts), but zero candidate-explode shuffles — dims ship in the UDF
     # closure per the broadcast-dimension pattern. Guarded: the closure-side
-    # dict only works while the agreements dim fits in memory.
-    if practice_matcher not in ("auto", "fast", "join"):
-        raise ValueError(f"practice_matcher: unknown value {practice_matcher!r}")
-    if practice_matcher == "fast":
-        use_fast = True
-    elif practice_matcher == "auto":
-        cap = config.FAST_MATCH_MAX_AGREEMENTS
-        if acuerdos_count is None:
-            # bounded probe: 1-column CollectLimit stops after cap+1 rows —
-            # no full scan of the agreements table just to pick a plan
-            acuerdos_count = (
-                acuerdos.select(acuerdos.columns[0]).limit(cap + 1).count()
-            )
-        use_fast = acuerdos_count <= cap
-    else:
-        use_fast = False
-    if use_fast:
+    # dict only works while the agreements dim fits in memory, so a bounded
+    # probe (1-column CollectLimit, stops after cap+1 rows) picks the plan
+    # without a full scan of the agreements table.
+    cap = config.FAST_MATCH_MAX_AGREEMENTS
+    if acuerdos.select(acuerdos.columns[0]).limit(cap + 1).count() <= cap:
         det = matching.match_practices_fast(practices, nom_e, acuerdos)
     else:
         det = matching.match_practices(practices, nom_e, acuerdos)

@@ -19,7 +19,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # default parallelism: the CPUs this process may run on (its affinity
+    # mask, which taskset/cgroup cpusets narrow), not the host's count
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     # Local mode: shuffle partitions ~ cores. Cluster mode: callers size this
     # to ~2-3x total cores (or rely on AQE coalescing from a higher initial).

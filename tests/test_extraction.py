@@ -161,7 +161,7 @@ def test_extract_documents_salted_flag_equal(spark, loaded):
     assert salted.exceptAll(plain).count() == 0
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "denormalized"])
+@pytest.mark.parametrize("strategy", ["denormalized"])
 def test_media_strategies_equal_join(spark, loaded, strategy):
     """Every media_ref resolution strategy yields the identical span
     sequence (the denormalized path needs the v3 sidecar's owner keys)."""
@@ -171,6 +171,18 @@ def test_media_strategies_equal_join(spark, loaded, strategy):
     other = extract.reassembled_docs(docs, media, strategy).select(cols)
     assert join_mode.exceptAll(other).count() == 0
     assert other.exceptAll(join_mode).count() == 0
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "denormalised"])
+def test_unknown_media_strategy_raises(spark, loaded, strategy):
+    """Only 'join' and 'denormalized' exist; anything else (the removed
+    'broadcast' hint, a typo) fails at plan build instead of silently
+    running the join plan."""
+    docs, media, _, _ = loaded
+    with pytest.raises(ValueError, match="media_strategy"):
+        extract.clean_spans(docs, media, strategy)
+    with pytest.raises(ValueError, match="media_strategy"):
+        extract.extract_documents(docs, media, media_strategy=strategy)
 
 
 def test_denormalized_requires_owner_keys(spark, loaded):
@@ -286,13 +298,12 @@ def test_colocated_tolerates_duplicate_and_null_media_ref(spark, loaded):
 
 
 def test_layout_blocks_path_equals_json_udf(spark, loaded):
-    """The typed-blocks layout path (JVM from_json + layout_text_blocks_udf,
-    the Arrow-bandwidth cut) is byte-identical to the raw-JSON reference UDF
-    over the whole corpus sidecar, plus NULL and blockless payloads."""
+    """The typed-blocks layout path (JVM from_json + layout_order_udf
+    permutation, apply_pruned_layout) is byte-identical to the raw-JSON
+    reference UDF over the whole corpus sidecar, plus NULL and blockless
+    payloads."""
     from medical_ocr_service_spark.functions.extraction_udfs import (
         apply_pruned_layout,
-        layout_blocks_col,
-        layout_text_blocks_udf,
         layout_text_udf,
     )
 
@@ -306,19 +317,14 @@ def test_layout_blocks_path_equals_json_udf(spark, loaded):
     df = apply_pruned_layout(base, out="pruned").select(
         "media_ref",
         layout_text_udf(F.col("layout_json")).alias("ref"),
-        layout_text_blocks_udf(layout_blocks_col(F.col("layout_json"))).alias("got"),
         "pruned",
     )
-    bad = df.filter(
-        ~F.col("ref").eqNullSafe(F.col("got"))
-        | ~F.col("ref").eqNullSafe(F.col("pruned"))
-    )
+    bad = df.filter(~F.col("ref").eqNullSafe(F.col("pruned")))
     assert bad.count() == 0, bad.limit(5).collect()
     byref = {r.media_ref: r for r in df.filter(F.col("media_ref").startswith("x")).collect()}
-    for col in ("got", "pruned"):
-        assert getattr(byref["xnull"], col) is None
-        assert getattr(byref["xnoblocks"], col) == ""
-        assert getattr(byref["xempty"], col) == ""
+    assert byref["xnull"].pruned is None
+    assert byref["xnoblocks"].pruned == ""
+    assert byref["xempty"].pruned == ""
 
 
 def test_strip_boilerplate_col_equals_udf(spark):
@@ -391,57 +397,6 @@ def test_text_span_branch_has_no_python_stage(spark, loaded):
     with contextlib.redirect_stdout(buf2):
         pure_text.explain("formatted")
     assert "ArrowEvalPython" not in buf2.getvalue()
-
-
-def test_extract_fields_col_equals_udf(spark, loaded):
-    """JVM field extraction == Arrow-UDF reference, over real corpus
-    full_texts plus adversarial edge strings."""
-    from medical_ocr_service_spark.functions.extraction_udfs import (
-        extract_fields_col,
-        extract_fields_udf,
-    )
-
-    docs, media, _, _ = loaded
-    texts = (
-        extract.reassembled_docs(docs, media)
-        .select("doc_id", "full_text")
-        .limit(150)
-    )
-    edge = spark.createDataFrame(
-        [
-            ("e0", None),
-            ("e1", ""),
-            ("e2", "Paciente:   CI: 123"),  # whitespace-only name group
-            ("e3", "CI: .--"),  # CI strips to ''
-            ("e4", "PRACTICAS: ; ; ."),  # empty items
-            ("e5", "PRACTICAS: eco x3; rx."),
-            ("e6", "ecografia y RMN URGENTE M.N. 12345"),
-            ("e7", "Diagnóstico: x (A12.3) 01/02/2024 RUC: 80-1"),
-            ("e8", "Mat: 999"),  # too short matricula group (no match, needs 4)
-            ("e9", "mat.: 12345 y matrícula profesional: 678901"),
-        ],
-        "doc_id string, full_text string",
-    )
-    both = texts.unionByName(edge)
-    out = both.select(
-        "doc_id",
-        extract_fields_udf(F.col("full_text")).alias("u"),
-        extract_fields_col(F.col("full_text")).alias("c"),
-    ).toPandas()
-    def _plain(v):
-        if hasattr(v, "asDict"):
-            v = v.asDict()
-        if isinstance(v, dict):
-            return {k: _plain(x) for k, x in v.items()}
-        import numpy as np
-
-        if isinstance(v, (list, tuple, np.ndarray)):
-            return [_plain(x) for x in v]
-        return v
-
-    for _, r in out.iterrows():
-        u, c = _plain(r["u"]), _plain(r["c"])
-        assert u == c, (r["doc_id"], u, c)
 
 
 def test_prescan_literals_sound_and_complete():

@@ -223,8 +223,8 @@ def test_fast_path_null_agreement_keys_never_match(spark):
 
 
 def test_auto_matcher_falls_back_to_join_path(spark, corpus_dir, monkeypatch):
-    """practice_matcher='auto' must route to the join path when the
-    agreements dim exceeds the configured fast-path ceiling."""
+    """run_previsacion must route to the join path when the agreements dim
+    exceeds the configured fast-path ceiling."""
     from medical_ocr_service_spark import config
     from medical_ocr_service_spark.corpus import generator
     from medical_ocr_service_spark.operators import matching

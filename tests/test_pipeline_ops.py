@@ -10,6 +10,7 @@ bit-exact salted-vs-unsalted equality).
 from __future__ import annotations
 
 import datetime as dt
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import functions as F
 
@@ -19,6 +20,13 @@ from medical_ocr_service_spark.operators.temporal import interarrival_stats
 from medical_ocr_service_spark.operators.text_analysis import (
     unigram_familiarity,
 )
+
+
+def _round_half_up(x: float, digits: int) -> float:
+    """Spark/DuckDB round(double, d): HALF_UP on the double's shortest
+    decimal form (Python's built-in round is half-even on the binary value)."""
+    q = Decimal(1).scaleb(-digits)
+    return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
 
 
 def test_exact_ntile_matches_window_ntile(spark):
@@ -811,7 +819,9 @@ def test_dup_ngram_stats_fuzz_vs_bruteforce(spark):
                 if any(g in shingle_sets[j] for j in shingle_sets if j != i)
             }
             if dup:
-                expected[i] = (len(s), len(dup), round(len(dup) / len(s), 9))
+                expected[i] = (
+                    len(s), len(dup), _round_half_up(len(dup) / len(s), 9)
+                )
         df = spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
         )
@@ -861,7 +871,9 @@ def test_pmi_topk_fuzz_vs_bruteforce(spark):
             (
                 f"{a} {b}",
                 c,
-                round((float(c) * float(t_total)) / (float(uni[a]) * float(uni[b])), 6),
+                _round_half_up(
+                    (float(c) * float(t_total)) / (float(uni[a]) * float(uni[b])), 6
+                ),
             )
             for (a, b), c in bi.items()
             if c >= 2
