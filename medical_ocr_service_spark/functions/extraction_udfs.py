@@ -1,6 +1,6 @@
 """Arrow pandas UDFs for the extraction core (the only executor-side Python).
 
-Three UDFs, all scalar pandas (Arrow-batched, never row-at-a-time Spark UDFs):
+All scalar pandas (Arrow-batched, never row-at-a-time Spark UDFs):
 
   * strip_boilerplate_udf  — text-density + tag-ratio main-content extraction
     (deterministic replacement for the reference's GPT-4o Vision read,
@@ -10,7 +10,12 @@ Three UDFs, all scalar pandas (Arrow-batched, never row-at-a-time Spark UDFs):
   * extract_fields_udf     — regex/state-machine field extraction + confidence
     fold (/root/reference/src/prompts/system.prompt.js:91-159,
     src/workers/previsacion.worker.js:229-263,
-    src/services/gpt-vision.service.js:209-243).
+    src/services/gpt-vision.service.js:209-243);
+  * layout_order_udf / layout_text_err_udf — the XY-cut as a permutation
+    over pruned coordinates (apply_pruned_layout, the production layout
+    path) and with per-row error capture (quarantine);
+  * colocated_doc_udf      — the co-located plan's single per-document node:
+    XY-cut per media_ref plus field extraction in one Python pass.
 
 Written independently from the pure-Python golden oracle
 (medical_ocr_service_spark.corpus.golden); the pytest suite asserts exact
@@ -300,65 +305,6 @@ def layout_text_err_udf(layouts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"text": texts, "error": errors}, index=layouts.index)
 
 
-LAYOUT_ENTRIES_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-)
-
-
-@F.pandas_udf(LAYOUT_ENTRIES_TYPE)
-def layout_entries_udf(entries: pd.Series) -> pd.Series:
-    """XY-cut over a per-document LIST of (media_ref, layout_json) entries.
-
-    The co-located extraction plan (extract.reassembled_docs_colocated)
-    aggregates raw layout payloads per doc_id BEFORE any Python stage, because
-    ArrowEvalPython does not propagate the child's hash partitioning — a UDF
-    between a bucketed scan and its groupBy re-introduces the very exchange
-    bucketing removed. Running the parse on the aggregated list keeps the
-    whole plan exchange-free; per-row semantics are identical to
-    layout_text_udf applied to each entry (None payload -> None text).
-
-    Malformed-sidecar tolerance (the output feeds map_from_entries, which
-    FAILS the whole job on duplicate or NULL map keys under Spark's default
-    EXCEPTION dedup policy): entries with a NULL media_ref are dropped, and
-    duplicate media_ref entries collapse to ONE deterministically — the
-    smallest non-null layout_json wins (collect_list order is
-    shuffle-dependent, so "first entry" would be a coin flip across runs).
-    The media sidecar's uniqueness contract makes this a no-op on
-    well-formed input; malformed media now degrades per-doc instead of
-    killing the run.
-    """
-    out = []
-    _missing = object()
-    for ent in entries:
-        if ent is None:
-            out.append(None)
-            continue
-        best: dict = {}
-        for e in ent:
-            mr = e["media_ref"]
-            if mr is None:
-                continue
-            lj = e["layout_json"]
-            cur = best.get(mr, _missing)
-            if cur is _missing or (lj is not None and (cur is None or lj < cur)):
-                best[mr] = lj
-        out.append(
-            [
-                {
-                    "media_ref": mr,
-                    "text": None if lj is None else _layout_one(lj),
-                }
-                for mr, lj in best.items()
-            ]
-        )
-    return pd.Series(out, index=entries.index, dtype=object)
-
-
 # ---------------------------------------------------------------------------
 # Field extraction + confidence fold
 # ---------------------------------------------------------------------------
@@ -567,3 +513,69 @@ def _extract_one(text: str) -> dict:
 def extract_fields_udf(texts: pd.Series) -> pd.DataFrame:
     rows = [_extract_one(t if t is not None else "") for t in texts]
     return pd.DataFrame(rows, index=texts.index)
+
+
+# ---------------------------------------------------------------------------
+# Co-located per-document UDF (layout + fields in one Python node)
+# ---------------------------------------------------------------------------
+
+COLOCATED_DOC_TYPE = T.StructType(
+    [
+        T.StructField("media_text", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("fields", FIELDS_SCHEMA),
+    ]
+)
+
+_MISSING = object()
+
+
+@F.pandas_udf(COLOCATED_DOC_TYPE)
+def colocated_doc_udf(spans: pd.Series, media: pd.Series) -> pd.DataFrame:
+    """All of one document's Python work for the co-located plan
+    (extract.reassembled_docs_colocated), in ONE Arrow node.
+
+    Inputs per document: ``spans``, the span-ordered array whose text
+    spans are already boilerplate-stripped JVM-side (media spans carry NULL
+    text), and ``media``, the doc's raw (media_ref, layout_json) list (NULL
+    when the doc has no media rows). Returns
+    (media_text: map media_ref -> XY-cut text, fields: FIELDS_SCHEMA):
+
+      * the XY-cut runs once per distinct media_ref. ArrowEvalPython drops
+        the child's hash partitioning, so the parse runs on the per-doc list
+        after the bucketed join instead of per media row before it;
+      * fields = _extract_one of the space-joined non-empty span texts in
+        span order, the same rule as the JVM full_text — the fields input
+        never makes a second trip through the JVM and a second Python node.
+
+    One node instead of two: each ArrowEvalPython node pays a fixed
+    per-task Python worker setup, far more than the layout parse itself
+    costs on small per-doc batches.
+
+    Malformed-sidecar tolerance: entries with a NULL media_ref are dropped,
+    and duplicate media_ref entries collapse to ONE deterministically — the
+    smallest non-null layout_json wins (collect_list order is
+    shuffle-dependent, so "first entry" would be a coin flip across runs).
+    The media sidecar's uniqueness contract makes this a no-op on
+    well-formed input; malformed media degrades per-doc instead of
+    failing the run.
+    """
+    media_texts, fields = [], []
+    for sp, ent in zip(spans, media):
+        best: dict = {}
+        for e in () if ent is None else ent:
+            mr = e["media_ref"]
+            if mr is None:
+                continue
+            lj = e["layout_json"]
+            cur = best.get(mr, _MISSING)
+            if cur is _MISSING or (lj is not None and (cur is None or lj < cur)):
+                best[mr] = lj
+        mt = {mr: None if lj is None else _layout_one(lj) for mr, lj in best.items()}
+        parts = []
+        for s in sp:
+            t = s["text"] if s["kind"] == "text" else mt.get(s["media_ref"])
+            if t:
+                parts.append(t)
+        media_texts.append(mt)
+        fields.append(_extract_one(" ".join(parts)))
+    return pd.DataFrame({"media_text": media_texts, "fields": fields}, index=spans.index)

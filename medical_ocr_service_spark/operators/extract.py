@@ -19,15 +19,20 @@ Scale design (10^12 docs / 100 TB):
     algorithm), or the denormalized union (media sidecar carries
     (doc_id, offset) owner keys -> zero joins, groupBy(doc_id) is the plan's
     only exchange);
-  * span order has ONE definition: reassembly to arrays via
-    sort_array(collect_list(struct(offset, ...))) — NEVER shuffle order.
-    Spans-per-doc is bounded (10^3 pathological), so per-key state is tiny;
-    AQE skew-join handles stragglers. ordered_spans is that array inlined;
+  * span order has ONE definition: sort_array over the _span_struct key
+    (offset, kind, media_ref, text) — NEVER shuffle order. Spans-per-doc is
+    bounded (10^3 pathological), so per-key state is tiny; AQE skew-join
+    handles stragglers. ordered_spans is that array inlined;
   * text-span cleaning is pure whole-stage-codegen column expressions
     (strip_boilerplate_col — no Python at all on that branch); the only
     Arrow pandas UDFs left are the XY-cut layout parse (recursive) and the
     per-doc field extraction (many-regex-per-row, measured faster in
-    compiled re than as a catalyst expression tree).
+    compiled re than as a catalyst expression tree);
+  * the zero-exchange co-located plan (reassembled_docs_colocated, for
+    doc_id-bucketed inputs) strips each span once, below its join, and runs
+    layout and fields in ONE Arrow node per document: each ArrowEvalPython
+    node carries a fixed per-task worker cost, and Catalyst re-evaluates
+    expressions merged into the projections around Python nodes.
 
 Reference parity: replaces the GPT-4o Vision + pdftoppm worker loop
 (/root/reference/src/workers/previsacion.worker.js:18-227) with deterministic
@@ -187,12 +192,29 @@ def reassembled_docs(
     return _reassemble_cleaned(cleaned)
 
 
-def _finish_reassembly(agg: DataFrame) -> DataFrame:
-    """(doc_id, _sorted) -> (doc_id, spans, full_text).
+def _span_struct(get, text: F.Column | None = None) -> F.Column:
+    """The reassembly sort key: struct(offset, kind, media_ref, text).
 
-    `_sorted` is the offset-ordered array<struct<offset,kind,text,media_ref>>;
-    this derives the 1-based `order` ranks and the space-joined full_text.
-    Shared tail of the shuffle, salted and co-located reassembly variants.
+    sort_array over it IS span order, in every plan: offset first, ties
+    broken by kind, then media_ref, then text. Text sorts last because the
+    co-located plan sorts before media text exists (media spans carry NULL
+    there), so two media spans at one offset must break their tie on
+    media_ref in every plan. ``get(name)`` reads a field (F.col on a frame,
+    the lambda element's ``__getitem__`` inside transform); ``text``
+    replaces the text field.
+    """
+    return F.struct(
+        *(get(c).alias(c) for c in ("offset", "kind", "media_ref")),
+        (get("text") if text is None else text).alias("text"),
+    )
+
+
+def _finish_reassembly(agg: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, _sorted, *keep) -> (doc_id, spans, full_text, *keep).
+
+    `_sorted` is the span-ordered array of _span_struct; this derives the
+    1-based `order` ranks and the space-joined full_text. Shared tail of the
+    shuffle, salted and co-located reassembly variants.
     """
     spans = F.transform(
         "_sorted",
@@ -211,53 +233,58 @@ def _finish_reassembly(agg: DataFrame) -> DataFrame:
         " ",
     )
     return agg.select(
-        "doc_id", spans.alias("spans"), full_text.alias("full_text")
+        "doc_id", spans.alias("spans"), full_text.alias("full_text"), *keep
     )
 
 
 def _reassemble_cleaned(cleaned: DataFrame) -> DataFrame:
     """groupBy(doc_id) + sort_array reassembly of a cleaned span frame."""
     agg = cleaned.groupBy("doc_id").agg(
-        F.sort_array(
-            F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
-        ).alias("_sorted")
+        F.sort_array(F.collect_list(_span_struct(F.col))).alias("_sorted")
     )
     return _finish_reassembly(agg)
 
 
-def reassembled_docs_colocated(docs: DataFrame, media: DataFrame) -> DataFrame:
-    """Shuffle-FREE reassembly for doc_id-co-partitioned inputs.
+def _colocated(docs: DataFrame, media: DataFrame) -> DataFrame:
+    """The zero-exchange co-located plan -> (doc_id, spans, full_text, fields).
 
-    The 100 TB plan: when `docs` and `media` are bucketed (Iceberg: hash
-    bucket-partitioned) by doc_id with the same bucket count, this plan has
-    ZERO exchanges — tests/test_extraction.py asserts `Exchange` is absent:
+    For docs and media bucketed (Iceberg: hash bucket-partitioned) by doc_id
+    with the same bucket count, the plan has ZERO exchanges and ONE Python
+    node; tests/test_extraction.py asserts both on the executed plan:
 
-      1. media.groupBy(doc_id) collects RAW (media_ref, layout_json) pairs —
-         pure JVM, satisfied by the bucketing, no shuffle. The layout parse
-         deliberately does NOT run here: ArrowEvalPython drops the child's
-         hash partitioning, so a UDF between the bucketed scan and the
-         groupBy would re-introduce the exchange (measured; see
-         layout_entries_udf).
-      2. sort-merge join docs <- media lists on doc_id ('merge' hint: the
+      1. docs side, before the join: text spans are boilerplate-stripped
+         (strip_boilerplate_col inside one transform) and the span array is
+         sorted on _span_struct. The strip runs exactly once per span:
+         Catalyst merges Projects that sit between Python nodes and
+         re-evaluates an aliased expression at each reference, but it cannot
+         inline a projection across a Join. The projection keeps doc_id, so
+         the bucketing survives.
+      2. media side: groupBy(doc_id) collects RAW (media_ref, layout_json)
+         pairs — pure JVM, satisfied by the bucketing. The layout parse does
+         NOT run here: ArrowEvalPython drops the child's hash partitioning,
+         so a UDF between the bucketed scan and the groupBy would
+         re-introduce the exchange.
+      3. sort-merge join docs <- media lists on doc_id ('merge' hint: the
          per-doc media list is corpus-sized at 10^12 docs — never a
          broadcast candidate). Both sides share the bucketing: no exchange,
          only partition-local sorts.
-      3. layout_entries_udf parses the joined lists (post-join Python is
-         harmless — nothing downstream needs a distribution), and a single
-         higher-order transform over the spans ARRAY cleans text spans
-         JVM-side (strip_boilerplate_col inside the lambda) and resolves
-         media spans from the per-doc map. No explode, no re-group: the
-         span array never leaves its row.
+      4. colocated_doc_udf does all the Python work in one Arrow node: the
+         XY-cut per distinct media_ref, and field extraction over the
+         space-joined span texts. Every ArrowEvalPython node pays a fixed
+         per-task Python worker setup that dwarfs these UDF bodies on
+         per-doc batches, so the plan has one node, not two.
+      5. JVM only after the UDF: media spans take their text from the
+         returned map. The array is already in span order — media text
+         could only break a tie between spans with the same media_ref,
+         which resolve to the same text — so there is no second sort;
+         _finish_reassembly derives spans and full_text.
 
     Requires the media sidecar to carry the owner key doc_id (written at
     ingest — corpus.generator). Unlike media_strategy='denormalized' this IS
     resume-safe: media rows join on doc_id, so media of already-done
     (filtered-out) docs simply drops out instead of resurrecting spans.
-
-    Output and semantics are identical to reassembled_docs (golden-equality
-    tested); `order` remains the 1-based offset rank via sort_array.
     """
-    from ..functions.extraction_udfs import layout_entries_udf
+    from ..functions.extraction_udfs import colocated_doc_udf
 
     if "doc_id" not in media.columns:
         raise ValueError(
@@ -270,30 +297,51 @@ def reassembled_docs_colocated(docs: DataFrame, media: DataFrame) -> DataFrame:
     # predicate covers both). Without it, a span-less doc would get a row
     # with empty spans + fields extracted from '', skewing docs_processed
     # counters and marking it done under checkpointed resume.
-    docs = docs.filter(F.size("spans") > 0)
+    stripped = F.sort_array(
+        F.transform(
+            "spans",
+            lambda s: _span_struct(
+                s.__getitem__,
+                F.when(s["kind"] == "text", strip_boilerplate_col(s["text"])),
+            ),
+        )
+    )
+    docs = docs.filter(F.size("spans") > 0).select(
+        "doc_id", stripped.alias("spans")
+    )
     media_lists = media.groupBy("doc_id").agg(
         F.collect_list(F.struct("media_ref", "layout_json")).alias("_mraw")
     )
-    joined = (
-        docs.join(media_lists.hint("merge"), "doc_id", "left")
-        .withColumn("_mtxt", F.map_from_entries(layout_entries_udf(F.col("_mraw"))))
-        .drop("_mraw")
+    per_doc = docs.join(media_lists.hint("merge"), "doc_id", "left").select(
+        "doc_id", "spans", colocated_doc_udf("spans", "_mraw").alias("_py")
     )
-    cleaned_arr = F.transform(
+    resolved = F.transform(
         "spans",
-        lambda s: F.struct(
-            s["offset"].alias("offset"),
-            s["kind"].alias("kind"),
-            F.when(
-                s["kind"] == F.lit("text"), strip_boilerplate_col(s["text"])
-            )
-            .otherwise(F.col("_mtxt")[s["media_ref"]])
-            .alias("text"),
-            s["media_ref"].alias("media_ref"),
+        lambda s: _span_struct(
+            s.__getitem__,
+            F.when(s["kind"] == "text", s["text"]).otherwise(
+                F.col("_py.media_text")[s["media_ref"]]
+            ),
         ),
     )
-    agg = joined.select("doc_id", F.sort_array(cleaned_arr).alias("_sorted"))
-    return _finish_reassembly(agg)
+    return _finish_reassembly(
+        per_doc.select(
+            "doc_id", resolved.alias("_sorted"), F.col("_py.fields").alias("fields")
+        ),
+        "fields",
+    )
+
+
+def reassembled_docs_colocated(docs: DataFrame, media: DataFrame) -> DataFrame:
+    """Shuffle-FREE reassembly for doc_id-co-partitioned inputs: the
+    co-located plan (_colocated) without its fields column.
+
+    Output and semantics are identical to reassembled_docs (golden-equality
+    tested); `order` remains the 1-based rank in span order. The Python node
+    still extracts fields here: Catalyst cannot prune inside a Python
+    result.
+    """
+    return _colocated(docs, media).select("doc_id", "spans", "full_text")
 
 
 def extract_documents(
@@ -328,22 +376,30 @@ def extract_documents(
 
 
 def extract_documents_colocated(docs: DataFrame, media: DataFrame) -> DataFrame:
-    """extract_documents over the zero-exchange co-located reassembly
-    (reassembled_docs_colocated): same output schema and values, no shuffle
-    anywhere in the plan when both inputs are bucketed by doc_id."""
-    return _with_fields(reassembled_docs_colocated(docs, media))
+    """extract_documents over the zero-exchange co-located plan (_colocated):
+    same output schema and values, no shuffle anywhere in the plan when both
+    inputs are bucketed by doc_id, and one Python node for layout and fields
+    together."""
+    return _colocated(docs, media).withColumn(
+        "requiere_revision", _review_flag(F.col("fields"))
+    )
+
+
+def _review_flag(fields: F.Column) -> F.Column:
+    """requiere_revision = confianza_extraccion < REVIEW_THRESHOLD
+    (reference pre-visacion.service.js:55)."""
+    from .. import config
+
+    return fields["confianza_extraccion"] < F.lit(config.REVIEW_THRESHOLD)
 
 
 def _with_fields(assembled: DataFrame) -> DataFrame:
     """Shared tail: structured-field extraction + review flag."""
-    from .. import config
-
     with_fields = assembled.withColumn(
         "fields", extract_fields_udf(F.col("full_text"))
     )
     return with_fields.withColumn(
-        "requiere_revision",
-        F.col("fields.confianza_extraccion") < F.lit(config.REVIEW_THRESHOLD),
+        "requiere_revision", _review_flag(F.col("fields"))
     )
 
 
@@ -393,11 +449,7 @@ def reassembled_docs_salted(
     phase1 = (
         cleaned.withColumn("_salt", F.pmod(F.hash("offset"), F.lit(n_salts)))
         .groupBy("doc_id", "_salt")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
-            ).alias("_part")
-        )
+        .agg(F.sort_array(F.collect_list(_span_struct(F.col))).alias("_part"))
     )
 
     merged = phase1.groupBy("doc_id").agg(

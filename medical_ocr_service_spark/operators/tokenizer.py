@@ -160,14 +160,19 @@ def bpe_encode(
 
     The merges are applied to the DISTINCT-word table only (vocabulary-
     sized work no matter the corpus size); documents then re-assemble by
-    an unhinted equi-join of their exploded words against the segmented
-    vocabulary (AQE broadcasts it when it is actually small) and an
-    order-preserving groupBy on (id, pos). The corpus text crosses exactly
-    two shuffles (explode -> join; groupBy) and the fold work never
-    touches it."""
+    an unhinted left equi-join of their exploded words against the
+    segmented vocabulary (AQE broadcasts it when it is actually small) and
+    an order-preserving groupBy on (id, pos). The corpus text crosses
+    exactly two shuffles (explode -> join; groupBy) and the fold work never
+    touches it.
+
+    Every input row yields exactly one output row: empty, whitespace-only
+    and NULL text explode (posexplode_outer) to one NULL word, which the
+    left join keeps with NULL syms and collect_list then skips, so such a
+    document encodes to tokens = []."""
     toks = df.select(
         F.col(id_col).alias("_id"),
-        F.posexplode(
+        F.posexplode_outer(
             F.filter(
                 F.split(F.lower(F.col(text_col)), "[ \t\n\r]+"),
                 lambda x: x != "",
@@ -177,16 +182,14 @@ def bpe_encode(
     vocab = bpe_segment_words(
         toks.select("word").distinct(), merges, "word", checkpoint_every
     )
+    pieces = F.when(F.col("syms").isNotNull(), F.struct("pos", "syms"))
     return (
-        toks.join(vocab, "word")
+        toks.join(vocab, "word", "left")
         .groupBy("_id")
         .agg(
             F.flatten(
                 F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("pos", "syms"))
-                    ),
-                    lambda s: s["syms"],
+                    F.array_sort(F.collect_list(pieces)), lambda s: s["syms"]
                 )
             ).alias("tokens")
         )

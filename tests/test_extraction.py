@@ -215,7 +215,12 @@ def test_colocated_bucketed_plan_has_zero_exchanges(spark, loaded, tmp_path):
     bucketed by doc_id (Iceberg bucket-transform analogue), the full
     extraction — layout parse, boilerplate strip, reassembly, field
     extraction — contains not a single Exchange (no shuffle, no broadcast).
-    Also re-checks output equality through the bucketed scan."""
+    Plan shape: ONE Python node (layout + fields together), the strip once
+    (the tag regex appears once: it sits below the join, where Catalyst
+    cannot inline it into the projections around the Python node), and no
+    per-span map built. Also re-checks output equality through the
+    bucketed scan."""
+    from medical_ocr_service_spark import config
     from medical_ocr_service_spark.sources import bucketed
 
     docs, media, _, _ = loaded
@@ -228,6 +233,9 @@ def test_colocated_bucketed_plan_has_zero_exchanges(spark, loaded, tmp_path):
         plan = result._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert "Bucketed: true" in plan, plan
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert plan.count(config.TAG_REGEX) == 1, plan
+        assert "map_from_entries" not in plan, plan
         # equality through the bucketed scan (drop the bucketed table's
         # tenant column ordering difference by selecting shared cols)
         cols = ["doc_id", "spans", "full_text"]
@@ -237,6 +245,53 @@ def test_colocated_bucketed_plan_has_zero_exchanges(spark, loaded, tmp_path):
         assert got.exceptAll(ref).count() == 0
     finally:
         spark.sql("DROP DATABASE IF EXISTS coloc_t CASCADE")
+
+
+def test_span_order_ties_agree_across_plans(spark, loaded):
+    """Spans sharing an offset break the tie on (kind, media_ref, text) in
+    every reassembly plan. Two media spans at one offset whose refs and
+    layout texts sort in opposite orders, plus two text spans at one
+    offset: the groupBy, salted and co-located plans must agree (the
+    co-located plan sorts before it knows media text)."""
+    import json
+
+    docs, media, _, _ = loaded
+
+    def layout(text):
+        return json.dumps(
+            {"blocks": [{"text": text, "x0": 0.0, "y0": 0.0, "x1": 10.0, "y1": 10.0}]}
+        )
+
+    spans = [
+        ("media", None, "media://tie/b", 1),
+        ("media", None, "media://tie/a", 1),
+        ("text", "zulu text", None, 2),
+        ("text", "alpha text", None, 2),
+    ]
+    tdocs = spark.createDataFrame([("docTIE", spans, "tenant-a")], docs.schema)
+    tmedia = spark.createDataFrame(
+        [
+            # ref a < ref b, but text of a ('zeta') > text of b ('alpha')
+            ("media://tie/a", layout("zeta"), 10, 10, "docTIE", 1),
+            ("media://tie/b", layout("alpha"), 10, 10, "docTIE", 1),
+        ],
+        media.schema,
+    )
+    cols = ["doc_id", "spans", "full_text"]
+    plain = extract.reassembled_docs(tdocs, tmedia).select(cols)
+    salted = extract.reassembled_docs_salted(tdocs, tmedia, n_salts=4).select(cols)
+    coloc = extract.reassembled_docs_colocated(tdocs, tmedia).select(cols)
+    for other in (salted, coloc):
+        assert plain.exceptAll(other).count() == 0
+        assert other.exceptAll(plain).count() == 0
+    (row,) = plain.collect()
+    assert [(s.media_ref, s.text) for s in row.spans] == [
+        ("media://tie/a", "zeta"),
+        ("media://tie/b", "alpha"),
+        (None, "alpha text"),
+        (None, "zulu text"),
+    ]
+    assert row.full_text == "zeta alpha alpha text zulu text"
 
 
 def test_extract_documents_colocated_equals_default(spark, loaded):
@@ -270,11 +325,11 @@ def test_colocated_drops_spanless_docs_like_default(spark, loaded):
 
 
 def test_colocated_tolerates_duplicate_and_null_media_ref(spark, loaded):
-    """ADVICE r3: map_from_entries fails the whole job on duplicate or NULL
-    map keys (spark.sql.mapKeyDedupPolicy=EXCEPTION default). A malformed
-    media sidecar must degrade per-doc instead: NULL media_ref entries are
-    dropped and duplicates collapse deterministically (smallest non-null
-    layout_json wins, independent of collect_list arrival order)."""
+    """ADVICE r3: a malformed media sidecar (a duplicate media_ref, a NULL
+    media_ref) must neither fail the job nor make the output depend on
+    collect_list arrival order. colocated_doc_udf drops NULL media_ref
+    entries and collapses duplicates deterministically (smallest non-null
+    layout_json wins), so the output equals the well-formed sidecar's."""
     docs, media, _, _ = loaded
     some = docs.limit(8)
     msub = media.join(some.select("doc_id"), "doc_id", "left_semi")

@@ -121,6 +121,22 @@ def test_bpe_encode_roundtrip_and_word_isolation(spark):
         assert "".join(enc[i]) == "".join(t.lower().split())
 
 
+def test_bpe_encode_keeps_empty_docs(spark):
+    """Every input row yields exactly one output row: empty, whitespace-only
+    and NULL text encode to tokens = [] instead of vanishing."""
+    texts = {0: CORPUS[0], 1: "", 2: " \t\n ", 3: None, 4: CORPUS[1]}
+    train = spark.createDataFrame(list(enumerate(CORPUS)), ["doc_id", "text"])
+    merges = learn_bpe_merges(train, "text", n_merges=10, checkpoint_every=4)
+    _ref_merges, ref_words = _ref_bpe(CORPUS, 10)
+    df = spark.createDataFrame(list(texts.items()), "doc_id int, text string")
+    rows = bpe_encode(df, merges).collect()
+    assert sorted(r["doc_id"] for r in rows) == sorted(texts)
+    enc = {r["doc_id"]: r["tokens"] for r in rows}
+    for i, t in texts.items():
+        words = (t or "").lower().split()
+        assert enc[i] == [s for w in words for s in ref_words[w]], (i, enc[i])
+
+
 def test_learn_bpe_merges_fuzz_vs_reference(spark):
     """Random small corpora: the distributed trainer's merge table must
     equal the reference implementation's for every draw (tie-breaks
